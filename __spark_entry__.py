@@ -28,11 +28,12 @@ def entry(spark: SparkSession) -> DataFrame:
     DECISION (r6, conscious): entry() stays on search_wand — it
     intentionally exercises the 100 TB scale path (compressed block-max
     segments + MaxScore pruning) even though the cost-dispatched product
-    path (engine.search_best, driver p50 0.359 s = 0.72x baseline) is
-    faster at this SF; forced-WAND is 1.08x baseline and rank-identical
-    to the exact scorer (proven by the bm25_wand_* driver entries
-    sharing the exact path's SQL oracle). bench.py's single_query
-    section measures search_best, so both paths stay visible."""
+    path (engine.search_topk_auto, driver p50 0.359 s = 0.72x baseline)
+    is faster at this SF; forced-WAND is 1.08x baseline and
+    rank-identical to the exact scorer (proven by the bm25_wand_* driver
+    entries sharing the exact path's SQL oracle). bench.py's
+    single_query section measures search_topk_auto, so both paths stay
+    visible."""
     from pyspark_codesearch.engine import documents_engine
 
     eng = documents_engine(spark, "/root/testdata/sf0.001")

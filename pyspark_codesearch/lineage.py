@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from .indexing import build_segments, corpus_stats
 
 N_BUCKETS = 8
+_INT_MAX = 2**31 - 1  # the segments' salt column is a 32-bit int
 
 
 class BuildInterrupted(RuntimeError):
@@ -308,6 +309,9 @@ def _build_index_resumable_unlocked(
     Fingerprints: docs stage fingerprints the (deterministic) input via
     count + sha256-xor of content hashes; downstream stages fingerprint
     their upstream manifest — a change in input invalidates everything.
+
+    Raises ValueError before any write when ``salt_range`` is too small
+    for the largest doc_id (the int salt would overflow).
     """
     spark = docs.sparkSession
     executed = {"n": 0}
@@ -333,8 +337,18 @@ def _build_index_resumable_unlocked(
     fp_row = docs.agg(
         F.count(F.lit(1)).alias("n"),
         F.sha2(F.concat_ws("", F.sort_array(F.collect_list("sha256"))), 256).alias("fp"),
+        F.max("doc_id").alias("max_id"),
     ).collect()[0]
     docs_fp = f"{fp_row['n']}:{fp_row['fp']}"
+    # salt = int(doc_id / salt_range) must fit an int: checked before the
+    # first write, or the segments stage would fail with CAST_OVERFLOW
+    # after the docs and postings units had already committed
+    max_id = fp_row["max_id"] or 0
+    if max_id // salt_range > _INT_MAX:
+        raise ValueError(
+            f"salt_range={salt_range} overflows the int salt of doc_id {max_id}; "
+            f"the smallest valid salt_range is {max_id // (_INT_MAX + 1) + 1}"
+        )
 
     def do_docs():
         docs.drop("tokens").write.mode("overwrite").parquet(f"{out_dir}/docs")
@@ -528,19 +542,48 @@ def impact_scale(out_dir: str, current_avgdl: float) -> float:
     would make MaxScore pruning UNSOUND after an avgdl-increasing upsert
     — rebuild the bucket (or the index) to restore the invariant."""
     scale = 1.0
+    for fn, m in _segment_manifests(out_dir):
+        built = m.get("built_avgdl")
+        if not built:
+            raise ValueError(
+                f"segments manifest {fn} lacks built_avgdl — cannot derive "
+                "a sound MaxScore bound; rebuild this bucket before "
+                "relying on impact-scaled pruning"
+            )
+        scale = max(scale, float(current_avgdl) / float(built))
+    return scale
+
+
+def _segment_manifests(out_dir: str):
+    """(file name, manifest dict) of every committed segments unit."""
     mdir = _manifest_dir(out_dir)
-    for fn in os.listdir(mdir):
+    for fn in sorted(os.listdir(mdir)):
         if fn.startswith("segments__") and fn.endswith(".json"):
             with open(os.path.join(mdir, fn)) as f:
-                built = json.load(f).get("built_avgdl")
-            if not built:
-                raise ValueError(
-                    f"segments manifest {fn} lacks built_avgdl — cannot derive "
-                    "a sound MaxScore bound; rebuild this bucket before "
-                    "relying on impact-scaled pruning"
-                )
-            scale = max(scale, float(current_avgdl) / float(built))
-    return scale
+                yield fn, json.load(f)
+
+
+def index_salt_range(out_dir: str, salt_range: int | None = None) -> int:
+    """The salt_range the index was built with, as every segments
+    manifest records it (driver-side JSON reads, no Spark job).
+
+    ``salt_range`` None returns it; an explicit value must equal it.
+    Rebuilding a bucket at another range would mix salt numbering
+    schemes in one index, and a scorer packing doc lens at the build's
+    range would then index salts it does not hold."""
+    recorded = {m.get("salt_range") for _, m in _segment_manifests(out_dir)}
+    if len(recorded) != 1 or None in recorded:
+        raise ValueError(
+            f"{out_dir}: segments manifests record salt_range "
+            f"{sorted(map(str, recorded))}, expected exactly one value"
+        )
+    (built,) = recorded
+    if salt_range is not None and salt_range != built:
+        raise ValueError(
+            f"salt_range={salt_range} differs from the salt_range={built} "
+            f"{out_dir} was built with"
+        )
+    return built
 
 
 def upsert_index(
@@ -549,7 +592,7 @@ def upsert_index(
     delta_docs: DataFrame | None = None,
     *,
     deleted_ids: list[int] | DataFrame | None = None,
-    salt_range: int = 1 << 20,
+    salt_range: int | None = None,
     fail_after_units: int | None = None,
 ) -> dict:
     """Public entry: :func:`_upsert_index_unlocked` under the index
@@ -573,7 +616,7 @@ def _upsert_index_unlocked(
     delta_docs: DataFrame | None = None,
     *,
     deleted_ids: list[int] | DataFrame | None = None,
-    salt_range: int = 1 << 20,
+    salt_range: int | None = None,
     fail_after_units: int | None = None,
 ) -> dict:
     """Apply a keyed upsert (+ deletes) to a built index, incrementally.
@@ -599,6 +642,9 @@ def _upsert_index_unlocked(
        CURRENT stats; manifests record built_avgdl for impact_scale().
 
     Guards:
+    - ``salt_range`` defaults to the one the build recorded
+      (:func:`index_salt_range`); a different explicit value raises
+      ValueError before anything is written;
     - a doc_id present in BOTH delta_docs and deleted_ids raises
       ValueError (applying both is ambiguous, and silently doing so would
       leave ghost postings whose doc has no doc_lens row);
@@ -616,6 +662,7 @@ def _upsert_index_unlocked(
     from .indexing import build_postings_with_dl
     from .operators.merge import merge_upsert
 
+    salt_range = index_salt_range(out_dir, salt_range)
     # recover any swap a previous run crashed in the middle of BEFORE
     # touching the tables (a mid-rename kill leaves only .staging behind)
     for t in ("docs", "doc_lens", "stats", "term_stats"):
@@ -932,7 +979,7 @@ def _check_no_inprogress_upsert(out_dir: str, delta_fp: str) -> None:
 
 
 def delete_from_index(
-    spark: SparkSession, out_dir: str, ids: list[int], *, salt_range: int = 1 << 20
+    spark: SparkSession, out_dir: str, ids: list[int], *, salt_range: int | None = None
 ) -> dict:
     """DELETE FROM the index by doc id — the delta-less half of
     :func:`upsert_index` (docs, postings, term_stats, segments all drop

@@ -87,7 +87,7 @@ def incremental_index(
 
 
 def compact_delta_into_index(
-    spark: SparkSession, index_dir: str, delta_dir: str, *, salt_range: int = 1 << 20
+    spark: SparkSession, index_dir: str, delta_dir: str, *, salt_range: int | None = None
 ) -> dict:
     """Fold the streamed ``docs_delta`` into a lineage-built base index —
     the compaction half of the streaming story (reference analogue: the

@@ -52,6 +52,11 @@ def _in_expr(col: str, values):
     either, but the helper should not rely on that — Spark SQL string
     literals process backslash escapes by default)."""
     vals = list(values)
+    for v in vals:
+        # anything else would diverge from isin silently: None renders as
+        # the string 'None', a float as a literal the int cast rejects
+        if not isinstance(v, (str, int, np.integer)):
+            raise TypeError(f"_in_expr takes str or int values, got {v!r}")
     if not vals:
         # SQL `IN ()` does not parse; match isin([])'s semantics
         return F.lit(False)
@@ -275,7 +280,7 @@ def _score_salt(
     return pd.DataFrame({"doc_id": cand_ids[order], "score": cand_scores[order]})
 
 
-# 'auto' batch-strategy budget: max dense cells — docs x (terms +
+# Batch scorer GEMM budget: max dense cells — docs x (terms +
 # queries), covering BOTH the contribution matrix C and the score matrix
 # S = C @ W — a single group task may allocate for the GEMM path. 8M
 # cells = 64 MB of float64, so even a full wave of concurrent tasks
@@ -613,7 +618,9 @@ def wand_topk(
         return _score_salt(seg_pdf, lens_pdf, qtf, dfs, n_docs, avgdl, k, k1, b,
                            impact_scale=impact_scale, init_theta=init_theta)
 
-    gkey = _group_key(salt_group_factor)
+    gkey = F.col("salt")
+    if salt_group_factor > 1:
+        gkey = (gkey / F.lit(int(salt_group_factor))).cast("int").alias("sg")
     per_salt = (
         seg.groupBy(gkey)
         .cogroup(lens.groupBy(gkey))
@@ -737,12 +744,6 @@ def wand_topk_selective(
     return spark.createDataFrame(merged, empty)
 
 
-def _group_key(salt_group_factor: int):
-    if salt_group_factor <= 1:
-        return F.col("salt")
-    return (F.col("salt") / F.lit(int(salt_group_factor))).cast("int").alias("sg")
-
-
 def wand_topk_batch(
     segments: DataFrame,
     doc_lens: DataFrame,
@@ -758,50 +759,40 @@ def wand_topk_batch(
     df_lookup: dict[str, int] | None = None,
     salt_lookup: dict[str, tuple[int, ...]] | None = None,
     impact_scale: float = 1.0,
-    salt_group_factor: int | None = 1,
-    strategy: str = "auto",
 ) -> DataFrame:
     """All queries in ONE cogroup pass: (query_id, rank, doc_id, score).
 
-    ``strategy='gemm'`` replaces the per-query MaxScore loop with one
-    scatter per TERM into a dense (group docs x batch terms) contribution
-    matrix C followed by a single ``C @ W`` matmul (W = terms x queries
-    qtf*idf weights) — per-query work collapses to one BLAS column +
-    top-k select. No per-query pruning, so it pays off when the batch is
-    wide enough that MaxScore's candidate freeze no longer saves decode
-    work (the contrib cache already decodes each term once either way):
-    measured at sf0.1 x16 (80k docs, local[32]) the 36-query batch runs
-    ~20% faster (1.0 vs 1.25 s), the 8-query batch at parity.
-
-    ``'auto'`` (default) decides PER GROUP, inside the task, where the
-    group's posting volume is known: gemm when the dense matrix stays
-    under ``GEMM_BUDGET_CELLS`` (estimated as group postings x batch
-    vocabulary — an upper bound of the true union x vocab), MaxScore
-    otherwise — so a production-sized salt (2^20 docs) with a wide
-    batch never allocates a multi-GB C. Results are identical either
-    way (both exact; summation order differs by the usual float 1 ULP —
-    tests pin 1e-9 parity).
-
     Segments are scanned once, term-pruned to the union of all query
-    terms; every salt partition runs the MaxScore scorer once per query
-    over its (already decoded-ready) term groups. One shuffle amortized
-    over the whole query batch — the scalable offline-retrieval shape.
-    With ``salt_lookup``, each query scores ONLY inside salts its own
-    terms touch (and the lens side is pruned to the batch-wide union),
-    so untouched salts cost nothing.
+    terms, and cogrouped with the lens side per salt. One shuffle
+    amortized over the whole query batch — the scalable offline-retrieval
+    shape. With ``salt_lookup``, each query scores ONLY inside salts its
+    own terms touch (and the lens side is pruned to the batch-wide
+    union), so untouched salts cost nothing.
 
-    ``salt_group_factor`` (G) coarsens the cogroup key to ``salt // G``
-    like :func:`wand_topk`; ``None`` auto-sizes for ~2 tasks per core.
-    DEFAULT IS 1 — measured (3.84M docs, 36 queries, local[2] and
-    local[8]): once the per-task python work is pre-split (term_groups)
-    and the query-independent contrib vectors are cached, finer tasks
-    win at every parallelism level (better wave balancing, smaller
-    per-task lens span); G=8 at 8 cores left half the cores idle and
-    ran 2.8x slower. Coarsening remains for latency-bound single
-    queries (:func:`wand_topk` uses G=16 in the bench). Exactness is
-    unaffected by G (doc ranges stay disjoint; pinned by tests)."""
-    if strategy not in ("maxscore", "gemm", "auto"):
-        raise ValueError(f"unknown batch strategy {strategy!r}")
+    Each salt group picks its scorer from its own size, inside the task
+    where the group's posting volume is known:
+
+    - GEMM when the dense matrices stay under ``GEMM_BUDGET_CELLS``
+      (estimated as group docs x (batch vocabulary + queries) — an upper
+      bound of the true size): one scatter per TERM into a dense (group
+      docs x batch terms) contribution matrix C, then a single ``C @ W``
+      matmul (W = terms x queries qtf*idf weights), so per-query work
+      collapses to one BLAS column + top-k select. Measured at sf0.1 x16
+      (80k docs, local[32]): the 36-query batch runs ~20% faster than
+      MaxScore (1.0 vs 1.25 s), the 8-query batch at parity.
+    - otherwise the per-query MaxScore loop over shared term groups, so
+      a production-sized salt (2^20 docs) with a wide batch never
+      allocates a multi-GB C.
+
+    Results are identical either way (both exact; summation order
+    differs by the usual float 1 ULP — tests pin 1e-9 parity).
+
+    The cogroup key is the single salt: measured (3.84M docs, 36
+    queries, local[2] and local[8]), once the per-task python work is
+    pre-split (term_groups) and the query-independent contrib vectors
+    are cached, finer tasks win at every parallelism level (better wave
+    balancing, smaller per-task lens span); grouping 8 salts per task at
+    8 cores left half the cores idle and ran 2.8x slower."""
     # snapshot on the DRIVER at plan time: score_fn runs in executor
     # python workers that re-import this module, where a test's (or
     # user's) module-level override would not be visible
@@ -829,7 +820,6 @@ def wand_topk_batch(
     seg = segments.filter(_in_expr("term", list(dfs)))
     lens = _lens(doc_lens, lens_by_salt, salt_range)
     qsalts = None
-    union: list[int] = []
     if salt_lookup is not None:
         union = _touched_salts(dfs, salt_lookup)
         if not union:
@@ -840,10 +830,6 @@ def wand_topk_batch(
         # per-query touched-salt sets: a query skips salts that only
         # OTHER queries' terms touch (cheap set probe per group)
         qsalts = {qid: set(_touched_salts(m, salt_lookup)) for qid, m in qtfs.items()}
-    if salt_group_factor is None:
-        # auto: ~2 scorer tasks per core (needs the touched-salt union)
-        cores = max(1, spark.sparkContext.defaultParallelism)
-        salt_group_factor = max(1, len(union) // (cores * 2)) if union else 1
     n_docs, avgdl = stats.n_docs, stats.avgdl
 
     def score_fn(key, seg_pdf: pd.DataFrame, lens_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -854,25 +840,19 @@ def wand_topk_batch(
                  "doc_id": pd.Series(dtype="int64"),
                  "score": pd.Series(dtype="float64")}
             )
-        # salts actually present in this (possibly coarse) group — the
-        # per-query skip below intersects against them
+        # the per-query skip below intersects against the group's salt
         group_salts = set(int(s) for s in seg_pdf["salt"].unique())
         term_groups = {
             t: g.sort_values(["salt", "block_id"])
             for t, g in seg_pdf.groupby("term", sort=False)
         }
-        pick = strategy
-        if pick == "auto":
-            # upper bound of the dense allocations without decoding
-            # anything: union of posting ids is capped by BOTH the
-            # group's total postings and the docs actually in this salt
-            # group (the cogrouped lens side lists exactly those). The
-            # budget covers C (docs x terms) AND the result S = C @ W
-            # (docs x queries) — a wide batch makes S the bigger matrix
-            est_docs = min(int(seg_pdf["n_docs"].sum()), _lens_count(lens_pdf))
-            est_cells = est_docs * (len(term_groups) + len(qtfs))
-            pick = "gemm" if est_cells <= gemm_budget else "maxscore"
-        if pick == "gemm":
+        # upper bound of the dense allocations without decoding anything:
+        # union of posting ids is capped by BOTH the group's total postings
+        # and the docs actually in this salt (the cogrouped lens side lists
+        # exactly those). The budget covers C (docs x terms) AND the result
+        # S = C @ W (docs x queries) — a wide batch makes S the bigger matrix
+        est_docs = min(int(seg_pdf["n_docs"].sum()), _lens_count(lens_pdf))
+        if est_docs * (len(term_groups) + len(qtfs)) <= gemm_budget:
             return _score_group_gemm(
                 term_groups, lens_pdf, qtfs, dfs, n_docs, avgdl, k, k1, b,
                 qsalts, group_salts,
@@ -900,10 +880,9 @@ def wand_topk_batch(
             )
         return pd.concat(outs, ignore_index=True)
 
-    gkey = _group_key(salt_group_factor)
     per_salt = (
-        seg.groupBy(gkey)
-        .cogroup(lens.groupBy(gkey))
+        seg.groupBy("salt")
+        .cogroup(lens.groupBy("salt"))
         .applyInPandas(score_fn, "query_id string, doc_id long, score double")
     )
     from pyspark.sql import Window

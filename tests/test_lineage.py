@@ -179,3 +179,23 @@ def test_quarantine_poison_rows(spark, docs, tmp_path_factory):
     # resume semantics unchanged: second run is a no-op
     res2 = build_index_resumable(poisoned, d, n_buckets=2, expected_sha_col="sha256")
     assert res2["executed_units"] == 0
+
+
+def test_salt_overflow_fails_before_any_commit(spark, tmp_path_factory):
+    """Bucket-composed ids (bucket << 40) overflow the int salt when
+    salt_range is small: the build refuses before its first write and
+    names the smallest valid salt_range, instead of failing in the
+    segments stage after the docs and postings units committed."""
+    from pyspark_codesearch.corpus import ingest_bucketed
+
+    docs = ingest_bucketed(corpus_df(spark, 40, seed=5)).cache()
+    max_id = docs.agg({"doc_id": "max"}).collect()[0][0]
+    assert max_id // 4096 > 2**31 - 1  # the corpus reaches a high bucket
+    smallest = max_id // 2**31 + 1
+    d = str(tmp_path_factory.mktemp("ovf"))
+    for bad in (4096, smallest - 1):
+        with pytest.raises(ValueError, match=f"smallest valid salt_range is {smallest}"):
+            build_index_resumable(docs, d, n_buckets=2, salt_range=bad)
+    assert not os.path.exists(os.path.join(d, "_lineage"))
+    res = build_index_resumable(docs, d, n_buckets=2, salt_range=2**20)
+    assert res["executed_units"] == 5

@@ -114,7 +114,7 @@ def test_exact_literal_plan_is_single_stage_over_doc_id_cache(env):
 
 def test_in_expr_matches_isin(spark):
     df = spark.createDataFrame(
-        [(1, "a"), (2, "b'c"), (3, "d")], "k int, s string"
+        [(1, "a"), (2, "b'c"), (3, "d"), (4, "None")], "k int, s string"
     )
     got = sorted(r["k"] for r in df.filter(_in_expr("s", ["a", "b'c"])).collect())
     want = sorted(
@@ -123,3 +123,11 @@ def test_in_expr_matches_isin(spark):
     assert got == want == [1, 2]
     got_i = sorted(r["s"] for r in df.filter(_in_expr("k", [2, 3])).collect())
     assert got_i == ["b'c", "d"]
+    # values a SQL literal cannot render the way isin binds them are
+    # refused: isin([None]) matches nothing (not the string 'None'), and
+    # isin([1.0]) on an int column matches 1 (the literal would not cast)
+    assert df.filter(F.col("s").isin([None])).count() == 0
+    assert [r["k"] for r in df.filter(F.col("k").isin([1.0])).collect()] == [1]
+    for col, vals in (("s", [None]), ("k", [1.0])):
+        with pytest.raises(TypeError):
+            _in_expr(col, vals)

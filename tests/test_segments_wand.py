@@ -267,42 +267,11 @@ def test_wand_batch_matches_single(env):
             assert s == pytest.approx(r["score"], abs=1e-9)
 
 
-def test_wand_batch_salt_group_factor_exact(env):
-    """Coarse cogroup keys (salt_group_factor > 1, incl. auto) are a pure
-    scheduling optimization: results identical to G=1."""
-    from pyspark_codesearch.wand import (
-        collect_term_salts,
-        prepare_lens_by_salt,
-        wand_topk_batch,
-    )
-
-    df_lookup = {r["term"]: int(r["df"]) for r in env["term_stats"].collect()}
-    salt_lookup = collect_term_salts(env["segments"])
-    lens_by_salt = prepare_lens_by_salt(env["doc_lens"], SALT_RANGE)
-    qmap = {
-        "a": "parse json string",
-        "b": "uniqterm000042",
-        "c": "return data index query token merge",
-    }
-    kw = dict(salt_range=SALT_RANGE, lens_by_salt=lens_by_salt,
-              df_lookup=df_lookup, salt_lookup=salt_lookup)
-    base = wand_topk_batch(
-        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-        qmap, 5, salt_group_factor=1, **kw,
-    ).collect()
-    for g in (8, 10**6, None):  # coarse, single-task, auto
-        got = wand_topk_batch(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, salt_group_factor=g, **kw,
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, base)), g
-    assert any(r["query_id"] == "b" for r in base)
-
-
-def test_search_topk_auto_dispatch(env):
+def test_search_topk_auto_dispatch(env, monkeypatch):
     """Cost dispatch routes on matched posting volume and both routes
     return the same ranking (the two paths are rank-identical; dispatch
     is purely a latency decision)."""
+    import pyspark_codesearch.engine as engine
     from pyspark_codesearch.engine import search_topk_auto
 
     q = "parse json string"
@@ -311,11 +280,12 @@ def test_search_topk_auto_dispatch(env):
     ).collect()]
 
     def run(budget):
+        monkeypatch.setattr(engine, "SEARCH_EXACT_MAX_POSTINGS", budget)
         route: dict = {}
         out = search_topk_auto(
             env["postings_dl"], env["segments"], env["doc_lens"],
             env["term_stats"], env["stats"], q, 10,
-            salt_range=SALT_RANGE, max_exact_postings=budget, route_out=route,
+            salt_range=SALT_RANGE, route_out=route,
         )
         return out, route
 
@@ -328,10 +298,10 @@ def test_search_topk_auto_dispatch(env):
     got = [(r["doc_id"], r["score"]) for r in out.collect()]
     assert [d for d, _ in got] == [d for d, _ in base]
 
-    # budget 0 forces the WAND route (two-phase selective plan: the θ
-    # hand-off collects eagerly, so assert via route_out + results, not
-    # plan shape); rank-identical, scores to 1e-9
-    out, route = run(0)
+    # a negative budget forces the WAND route (two-phase selective plan:
+    # the θ hand-off collects eagerly, so assert via route_out + results,
+    # not plan shape); rank-identical, scores to 1e-9
+    out, route = run(-1)
     assert route["route"] == "wand"
     assert route["phase2"] in ("proved_away", "seeded", "no_other_salts")
     got = [(r["doc_id"], r["score"]) for r in out.collect()]
@@ -340,6 +310,7 @@ def test_search_topk_auto_dispatch(env):
         assert s == pytest.approx(e, abs=1e-9)
 
     # no df_lookup provided -> the dispatcher seeks term_stats itself
+    monkeypatch.undo()  # back to the default threshold
     route = {}
     out = search_topk_auto(
         env["postings_dl"], env["segments"], env["doc_lens"],
@@ -420,9 +391,11 @@ def test_wand_init_theta_soundness(env):
     assert none == []
 
 
-def test_wand_batch_gemm_strategy_exact(env):
-    """strategy='gemm' (one C @ W matmul per group) is result-identical
-    to the MaxScore loop: same docs, same ranks, scores to 1e-9."""
+def test_wand_batch_gemm_strategy_exact(env, monkeypatch):
+    """The per-group GEMM scorer (one C @ W matmul per group, taken under
+    the default budget at test scale) is result-identical to the MaxScore
+    loop (forced by a zero budget): same docs, same ranks, scores to 1e-9."""
+    import pyspark_codesearch.wand as wand_mod
     from pyspark_codesearch.wand import (
         collect_term_salts,
         prepare_lens_by_salt,
@@ -441,35 +414,19 @@ def test_wand_batch_gemm_strategy_exact(env):
     }
     kw = dict(salt_range=SALT_RANGE, lens_by_salt=lens_by_salt,
               df_lookup=df_lookup, salt_lookup=salt_lookup)
+    gemm = wand_topk_batch(
+        env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
+        qmap, 5, **kw,
+    ).collect()
+    monkeypatch.setattr(wand_mod, "GEMM_BUDGET_CELLS", 0)
     base = wand_topk_batch(
         env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-        qmap, 5, strategy="maxscore", **kw,
+        qmap, 5, **kw,
     ).collect()
     bk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in base}
-    for strat in ("gemm", "auto"):
-        got = wand_topk_batch(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, strategy=strat, **kw,
-        ).collect()
-        gk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in got}
-        assert bk.keys() == gk.keys(), strat
-        for key in bk:
-            assert bk[key][0] == gk[key][0], (strat, key)
-            assert gk[key][1] == pytest.approx(bk[key][1], abs=1e-9), (strat, key)
-    # auto falls back to maxscore when the dense matrix would exceed budget
-    import pyspark_codesearch.wand as wand_mod
-    old_budget = wand_mod.GEMM_BUDGET_CELLS
-    try:
-        wand_mod.GEMM_BUDGET_CELLS = 0
-        tiny = wand_topk_batch(
-            env["segments"], env["doc_lens"], env["term_stats"], env["stats"],
-            qmap, 5, strategy="auto", **kw,
-        ).collect()
-    finally:
-        wand_mod.GEMM_BUDGET_CELLS = old_budget
-    tk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in tiny}
-    assert tk.keys() == bk.keys()
+    gk = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in gemm}
+    assert bk.keys() == gk.keys()
+    for key in bk:
+        assert bk[key][0] == gk[key][0], key
+        assert gk[key][1] == pytest.approx(bk[key][1], abs=1e-9), key
     assert any(r["query_id"] == "b" for r in base)
-    with pytest.raises(ValueError):
-        wand_topk_batch(env["segments"], env["doc_lens"], env["term_stats"],
-                        env["stats"], qmap, 5, strategy="nope", **kw)

@@ -312,6 +312,38 @@ def test_deleted_ids_accepts_dataframe(spark, tmp_path):
     )
 
 
+def test_upsert_uses_recorded_salt_range(spark, tmp_path):
+    """An upsert without salt_range rebuilds buckets at the range the
+    build recorded, so WAND still equals exact afterwards (a fixed 2**20
+    default re-salted the bucket and broke the scorer at 32); a
+    different explicit range is refused before anything is written."""
+    from pyspark_codesearch.scoring import bm25_topk
+
+    out = str(tmp_path / "srix")
+    docs = ingest(corpus_df(spark, 60, seed=13))
+    build_index_resumable(docs, out, n_buckets=2, salt_range=32)
+    with pytest.raises(ValueError, match="salt_range=64"):
+        upsert_index(spark, out, _delta(spark), salt_range=64)
+    assert not os.path.exists(os.path.join(out, "_lineage", "upsert_plan.json"))
+
+    res = upsert_index(spark, out, _delta(spark))
+    assert res["affected_buckets"]
+    assert {m["salt_range"] for m in _seg_manifests(out).values()} == {32}
+    st = spark.read.parquet(f"{out}/stats").collect()[0]
+    scale = impact_scale(out, float(st["avgdl"]))
+    _, doc_lens, term_stats, stats = _load(spark, out)
+    postings = spark.read.parquet(f"{out}/postings")
+    for q in ["merge sort index", "upserterm 900005", "parse json stream scan"]:
+        got = _wand(spark, out, q, scale=scale, salt_range=32)
+        want = [
+            (r["doc_id"], r["score"])
+            for r in bm25_topk(postings, doc_lens, term_stats, stats, q, 10).collect()
+        ]
+        assert got and [d for d, _ in got] == [d for d, _ in want], q
+        for (_, a), (_, b) in zip(got, want):
+            assert a == pytest.approx(b, abs=1e-9), q
+
+
 def test_impact_scale_raises_without_built_avgdl(spark, tmp_path):
     out = str(tmp_path / "noavg")
     docs = ingest(corpus_df(spark, 30, seed=4))
